@@ -13,7 +13,6 @@ Layout:
   codecs/     pure numpy/pyarrow encode/decode kernels (no Spark imports)
   operators/  training-data operators (dedup, similarity, text analysis)
   sources/    synthetic repo-table generator, testdata loaders
-  functions/  Spark Column helper functions
   plans/      the distributed encode/decode/verify pipeline + manifest
   streaming/  foreachBatch incremental encode
 """

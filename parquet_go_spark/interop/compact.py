@@ -59,40 +59,40 @@ _ARROW_TO_SPARK = {
     "date32[day]": "date",
 }
 
-_PQ_CODEC = {"UNCOMPRESSED": None, "SNAPPY": "snappy", "GZIP": "gzip",
-             "ZSTD": "zstd", "BROTLI": "brotli"}
-
-# format CompressionCodec ids → write_table names (encrypted-source
-# inherit reads OUR footer, where the codec is the raw thrift id)
+# format CompressionCodec ids → write_table names. Sources are read by
+# id: pyarrow names id 7 "LZ4" and the legacy id 5 "UNKNOWN".
 _CODEC_ID = {0: None, 1: "snappy", 2: "gzip", 4: "brotli",
              5: "lz4_legacy", 6: "zstd", 7: "lz4_raw"}
 
 INHERIT = "__inherit__"
 
 
+def _codec_name(codec_id: int, path: str) -> str | None:
+    """write_table name for a source's codec id. An id the writer
+    cannot write (LZO, or one from a newer format) raises rather than
+    compacting the file UNCOMPRESSED."""
+    if codec_id not in _CODEC_ID:
+        raise ValueError(
+            f"compact: {path} uses compression codec id {codec_id}, "
+            "which the parquet writer cannot write; pass an explicit "
+            "compression")
+    return _CODEC_ID[codec_id]
+
+
 def _inherit_props(path: str, decryption):
-    """(codec_name, sorting LEAF indexes, bloom columns) of one source
-    file — footer bytes only. Plaintext files go through pyarrow's
-    metadata object; encrypted ones through OUR footer reader (pyarrow
-    cannot open them without its own key plumbing)."""
-    if decryption is None:
-        import pyarrow.parquet as pq
+    """(codec id, sorting LEAF indexes, bloom columns) of one source
+    file — footer bytes only, read through OUR footer reader for
+    plaintext and encrypted files alike (pyarrow cannot open encrypted
+    ones without its own key plumbing)."""
+    from parquet_go_spark.interop import pqreader
 
-        md = pq.ParquetFile(path).metadata
-        comp = _PQ_CODEC.get(md.row_group(0).column(0).compression)
-        sorting = [s.column_index
-                   for s in (md.row_group(0).sorting_columns or [])]
-    else:
-        from parquet_go_spark.interop import pqreader
-
-        with open(path, "rb") as f:
-            fmd = pqreader._read_footer_file(
-                f, os.path.getsize(path), path, decryption)
-        rg = fmd[4][0]
-        comp = _CODEC_ID.get(rg[1][0][3][4])
-        sorting = [sc[1] for sc in (rg.get(4) or [])]
+    with open(path, "rb") as f:
+        fmd = pqreader._read_footer_file(
+            f, os.path.getsize(path), path, decryption)
+    rg = fmd[4][0]
+    sorting = [sc[1] for sc in (rg.get(4) or [])]
     bloom = pqbloom.bloom_column_names(path, decryption) or None
-    return comp, sorting, bloom
+    return rg[1][0][3][4], sorting, bloom
 
 
 def _merge_fn(out_dir: str, columns, compression, page_rows: int,
@@ -120,9 +120,10 @@ def _merge_fn(out_dir: str, columns, compression, page_rows: int,
                 paths = [os.path.join(out_dir, f) for f in files]
                 # inherit the sources' codec + declared sort order +
                 # bloom-filtered columns (footer-only scans)
-                src_comp, leaf_sort, bloom_cols = _inherit_props(
+                src_codec, leaf_sort, bloom_cols = _inherit_props(
                     paths[0], decryption)
-                comp = src_comp if compression == INHERIT else compression
+                comp = (_codec_name(src_codec, paths[0])
+                        if compression == INHERIT else compression)
                 sorting = [leaf_to_top[i] for i in leaf_sort]
                 # promote: source files may disagree on nullability (a
                 # file whose slice had no nulls declares the column —

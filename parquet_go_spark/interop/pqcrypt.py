@@ -7,11 +7,12 @@ FileMetaData.encryption_algorithm), with the footer key and/or
 per-column keys supplied by the caller — either directly or through a
 key-retriever callback that resolves the file's key_metadata (e.g.
 pyarrow/parquet-mr "PKMT1" key material). AES_GCM_CTR_V1 is read
-(thrift modules GCM, page bodies unauthenticated CTR); external /
-double-wrapped key material is rejected with clear errors. The
-reference covers the same surface in encrypt.go / writer.go:2452-2479;
-our write side (below) authors AES_GCM_V1 only — the authenticated
-mode and the reference's own default.
+(thrift modules GCM, page bodies unauthenticated CTR). PKMT1 key
+material is read single- or double-wrapped; external key material is
+rejected with a clear error. The reference covers the same surface in
+encrypt.go / writer.go:2452-2479; our write side (below) authors
+AES_GCM_V1 only — the authenticated mode and the reference's own
+default.
 
 Format facts (parquet-format Encryption.md, verified against
 pyarrow-written files):
@@ -300,7 +301,12 @@ def sign_footer(key: bytes, file_aad: bytes, footer: bytes) -> bytes:
     after the serialized FileMetaData in plaintext-footer mode. The
     tag is GCM over the FOOTER BYTES AS PLAINTEXT with the footer
     module AAD — the construction pyarrow/parquet-mr verify (and the
-    mirror of the check in pqreader._read_footer_file)."""
+    mirror of the check in pqreader._read_footer_file).
+
+    The reference's signFooter (encrypt.go) is not this spec
+    construction: it GCM-encrypts EMPTY plaintext with the footer as
+    AAD. Footers signed by the reference and by this function cannot
+    verify each other."""
     import os
 
     nonce = os.urandom(12)

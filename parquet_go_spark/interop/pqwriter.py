@@ -1129,6 +1129,15 @@ def write_table(path: str, columns: list[ColumnSpec], *,
             lf["dotted"] = ".".join(lf["nested"].path)
         else:
             lf["dotted"] = lf["spec"].name
+    if encryption is not None:
+        # a misspelled name would silently fall back to the footer key
+        unknown = (set(encryption.column_keys)
+                   | set(encryption.plaintext_columns)) \
+            - {lf["dotted"] for lf in leaves}
+        if unknown:
+            raise ValueError(
+                "encryption column_keys/plaintext_columns name no leaf "
+                f"column: {sorted(unknown)}")
 
     out = bytearray(b"PARE" if encryption is not None
                     and not encryption.plaintext_footer else _MAGIC)

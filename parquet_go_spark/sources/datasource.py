@@ -59,7 +59,7 @@ from pyspark.sql.datasource import (
     LessThanOrEqual,
     WriterCommitMessage,
 )
-from pyspark.sql.types import StructField, StructType
+from pyspark.sql.types import StructType
 
 
 @dataclass
@@ -87,9 +87,10 @@ def _decode_blob_table(tbl, cols):
 
 
 def _stat_key(spark_type: str, stat: str):
-    """Manifest min/max string → comparable value, mirroring
-    pipeline._stat_expr: byte space for strings/binary (latin-1 round
-    trip of the truncated bound bytes), int for the integer family
+    """Manifest min/max string → comparable value: byte space for
+    strings/binary (latin-1 round trip of the truncated bound bytes,
+    compared unsigned as the reference compares truncated byte bounds,
+    column_index.go:499-533), int for the integer family
     (timestamps are stored as epoch micros, dates as epoch days),
     float for floats. Returns None — meaning "unbounded, keep" — for
     types we don't compare and for NaN float bounds (a chunk holding
@@ -116,13 +117,12 @@ def _stat_key(spark_type: str, stat: str):
 
 
 def _probe_key(spark_type: str, value):
-    """User filter literal → the same comparison space (mirrors
-    pipeline._probe_expr). Spark pushes timestamp literals as
-    datetime.datetime and date literals as datetime.date — convert to
-    the encoded representation (micros / epoch days, matching
-    pipeline._arrow_to_values). Returns None — "cannot compare, keep
-    the chunk" — on any unexpected value shape: pruning must only ever
-    skip work, never guess."""
+    """User filter literal → the same comparison space. Spark pushes
+    timestamp literals as datetime.datetime and date literals as
+    datetime.date — convert to the encoded representation (micros /
+    epoch days, matching pipeline._arrow_to_values). Returns None —
+    "cannot compare, keep the chunk" — on any unexpected value shape:
+    pruning must only ever skip work, never guess."""
     import datetime as _dt
     import math
 
@@ -162,9 +162,9 @@ def _probe_key(spark_type: str, value):
                 return None
             return int(value)
         if spark_type.startswith("decimal("):
-            # scale the literal into the manifest's UNSCALED-int space
-            # (mirrors pipeline._probe_expr); inexact literals → None =
-            # keep the chunk (rounding would mis-prune range predicates)
+            # scale the literal into the manifest's UNSCALED-int space;
+            # inexact literals → None = keep the chunk (rounding would
+            # mis-prune range predicates)
             from parquet_go_spark.plans.pipeline import (_decimal_info,
                                                          _unscaled)
 
@@ -180,6 +180,42 @@ def _probe_key(spark_type: str, value):
     return None
 
 
+def _bloom_probe(spark_type: str, keys: list):
+    """Comparison-space keys → (values, kind) in the column's PHYSICAL
+    kind and dtype: the bits its bloom was built from
+    (pipeline._col_kind; decimals as unscaled int32/int64 or FLBA(16)
+    int128 little-endian words, pipeline._decimal_to_values). An
+    int64/double probe of an int32/float bloom hashes differently and
+    would be a silent false negative, so a key with no exact physical
+    form returns None — probe nothing, keep the chunk."""
+    import numpy as np
+
+    from parquet_go_spark.codecs.bytearrays import ByteArrays
+    from parquet_go_spark.codecs.kinds import Kind
+    from parquet_go_spark.plans import pipeline
+
+    kind = pipeline._col_kind(spark_type)
+    if kind == Kind.BYTE_ARRAY:
+        return ByteArrays.from_pylist(keys), kind
+    if kind == Kind.FIXED_LEN_BYTE_ARRAY:
+        mask64 = (1 << 64) - 1
+        words = np.array([[k & mask64, (k >> 64) & mask64] for k in keys],
+                         dtype=np.uint64)
+        return words.view(np.uint8).reshape(len(keys), 16), kind
+    np_dt = {Kind.INT32: np.int32, Kind.INT64: np.int64,
+             Kind.FLOAT: np.float32, Kind.DOUBLE: np.float64}.get(kind)
+    if np_dt is None:
+        return None
+    try:
+        vals = np.array(keys, dtype=np_dt)
+    except OverflowError:
+        return None
+    if vals.dtype.kind == "i" and any(
+            int(v) != int(k) for v, k in zip(vals, keys)):
+        return None  # silent wrap
+    return vals, kind
+
+
 def _chunk_survives(filters, col_types, stats, blooms,
                     nulls=None) -> bool:
     """Can a chunk possibly hold rows matching ALL filters?
@@ -187,12 +223,11 @@ def _chunk_survives(filters, col_types, stats, blooms,
     stats: {column: (min_str|None, max_str|None)}; blooms:
     {column: bloom blob bytes|None}; nulls:
     {column: (null_count|None, n_rows|None)}. NULL bounds mean
-    unbounded — unprunable (matches pruned_decode's keep rule)."""
-    import numpy as np
-
+    unbounded — unprunable: _truncate_max returns None for an all-0xFF
+    prefix, and boolean/empty chunks record no stats at all. The one
+    chunk-summary evaluator for the store (pipeline.pruned_decode and
+    bloom_point_decode read through this source)."""
     from parquet_go_spark.codecs import bloom as bloomlib
-    from parquet_go_spark.codecs.bytearrays import ByteArrays
-    from parquet_go_spark.codecs.kinds import Kind
 
     for col, op, value in filters:
         if op in ("isnull", "notnull"):
@@ -222,59 +257,10 @@ def _chunk_survives(filters, col_types, stats, blooms,
             if not alive:
                 return False
             blob = blooms.get(col)
-            if blob is not None:
-                # probe with the column's PHYSICAL kind and dtype — the
-                # filter was built from those bits (pipeline._col_kind);
-                # an int64/double probe of an int32/float bloom hashes
-                # differently and would be a silent false negative
-                if spark_type in ("string", "binary"):
-                    vals = ByteArrays.from_pylist(alive)
-                    kind = Kind.BYTE_ARRAY
-                elif spark_type.startswith("decimal("):
-                    from parquet_go_spark.plans import pipeline
-
-                    # probe in the column's PHYSICAL decimal space
-                    # (unscaled int32/int64, or the FLBA(16) int128
-                    # little-endian words — same layout the bloom was
-                    # built from, pipeline._col_kind/_decimal_to_values)
-                    kind = pipeline._col_kind(spark_type)
-                    dp = pipeline._decimal_info(spark_type)
-                    if dp[0] <= 18:
-                        np_dt = np.int32 if dp[0] <= 9 else np.int64
-                        try:
-                            vals = np.array(alive, dtype=np_dt)
-                        except OverflowError:
-                            continue
-                        if any(int(v) != int(a)
-                               for v, a in zip(vals, alive)):
-                            continue  # wrap = silent false negative
-                    else:
-                        mask64 = (1 << 64) - 1
-                        words = np.array(
-                            [[v & mask64, (v >> 64) & mask64]
-                             for v in alive], dtype=np.uint64)
-                        vals = words.view(np.uint8).reshape(len(alive), 16)
-                else:
-                    from parquet_go_spark.plans import pipeline
-
-                    kind = pipeline._col_kind(spark_type)
-                    np_dt = {Kind.INT32: np.int32, Kind.INT64: np.int64,
-                             Kind.FLOAT: np.float32,
-                             Kind.DOUBLE: np.float64}.get(kind)
-                    if np_dt is None:
-                        continue  # no safe bloom probe for this kind
-                    try:
-                        vals = np.array(alive, dtype=np_dt)
-                    except OverflowError:
-                        continue  # probe outside the physical range
-                    if vals.dtype.kind == "i" and any(
-                        int(v) != int(a) for v, a in zip(vals, alive)
-                    ):
-                        continue  # silent wrap would be a false negative
-                if not bool(
-                    bloomlib.might_contain(blob, vals, kind).any()
-                ):
-                    return False
+            probe = None if blob is None else _bloom_probe(spark_type, alive)
+            if probe is not None and not bool(
+                    bloomlib.might_contain(blob, *probe).any()):
+                return False
         elif op in ("gt", "gte") and mx is not None:
             if mx < keys[0] or (op == "gt" and mx == keys[0]):
                 return False
@@ -300,6 +286,10 @@ def _anchor_tz(col_type: str, value):
     return value
 
 
+_COMPARE_OPS = {EqualTo: "eq", GreaterThan: "gt", GreaterThanOrEqual: "gte",
+                LessThan: "lt", LessThanOrEqual: "lte"}
+
+
 def _translate_filters(filters, col_types):
     """Spark Filter objects → picklable (col, op, value) triples for the
     columns/types we can prune on. Unsupported filters are ignored here
@@ -317,18 +307,10 @@ def _translate_filters(filters, col_types):
             # no literal: prunes on the manifest's null_count alone
             out.append((col, "isnull" if isinstance(f, IsNull)
                         else "notnull", None))
-        elif isinstance(f, EqualTo):
-            out.append((col, "eq", _anchor_tz(t, f.value)))
         elif isinstance(f, In):
             out.append((col, "in", _anchor_tz(t, list(f.value))))
-        elif isinstance(f, GreaterThan):
-            out.append((col, "gt", _anchor_tz(t, f.value)))
-        elif isinstance(f, GreaterThanOrEqual):
-            out.append((col, "gte", _anchor_tz(t, f.value)))
-        elif isinstance(f, LessThan):
-            out.append((col, "lt", _anchor_tz(t, f.value)))
-        elif isinstance(f, LessThanOrEqual):
-            out.append((col, "lte", _anchor_tz(t, f.value)))
+        elif type(f) in _COMPARE_OPS:
+            out.append((col, _COMPARE_OPS[type(f)], _anchor_tz(t, f.value)))
     return out
 
 
@@ -339,11 +321,10 @@ class ColcodecReader(DataSourceReader):
         self._filters: list[tuple[str, str, object]] = []
 
     def pushFilters(self, filters):
-        scalar_types = {
-            c: t for c, t in self._cols
-            if not (t.startswith("array<") or t.startswith("map<")
-                    or t.startswith("struct<"))
-        }
+        from parquet_go_spark.plans import pipeline
+
+        scalar_types = {c: t for c, t in self._cols
+                        if not pipeline._is_container(t)}
         self._filters = _translate_filters(filters, scalar_types)
         # we only SKIP chunks; Spark must still evaluate every filter
         # exactly (bloom fpp / truncated bounds admit false positives).
@@ -372,12 +353,12 @@ class ColcodecReader(DataSourceReader):
     def read(self, partition: _FileSlice | None):
         import pyarrow.parquet as pq
 
-        from parquet_go_spark.plans import pipeline
-
         if partition is None:  # empty store: Spark passes one None slice
             return
 
         col_types = dict(self._cols)
+        # projection: blob rows of unrequested columns are never read
+        blob_rows = [("column", "in", [c for c, _ in self._cols])]
         if partition.filters:
             # metadata columns only — the blob column (the file's bulk)
             # is not touched until chunks survive; bloom bitsets are
@@ -402,10 +383,10 @@ class ColcodecReader(DataSourceReader):
             for row in meta.to_pylist():  # blob-row count: metadata scale
                 st, bl, nu = per_chunk.setdefault(
                     row["chunk_id"], ({}, {}, {}))
-                if not null_only:
-                    st[row["column"]] = (row["min_val"], row["max_val"])
-                    bl[row["column"]] = row["bloom"]
-                nu[row["column"]] = (row["null_count"], row["n_rows"])
+                c = row["column"]
+                st[c] = (row.get("min_val"), row.get("max_val"))
+                bl[c] = row.get("bloom")
+                nu[c] = (row["null_count"], row["n_rows"])
             keep = {
                 cid for cid, (st, bl, nu) in per_chunk.items()
                 if _chunk_survives(partition.filters, col_types, st, bl, nu)
@@ -421,10 +402,10 @@ class ColcodecReader(DataSourceReader):
             # dropped during the scan, not materialized then discarded
             tbl = pq.read_table(
                 partition.path,
-                filters=[("chunk_id", "in", sorted(keep))],
+                filters=[("chunk_id", "in", sorted(keep))] + blob_rows,
             )
         else:
-            tbl = pq.read_table(partition.path)
+            tbl = pq.read_table(partition.path, filters=blob_rows)
         yield from _decode_blob_table(tbl, self._cols)
 
 
@@ -446,13 +427,27 @@ class ColcodecDataSource(DataSource):
     def schema(self) -> StructType:
         from parquet_go_spark.plans import pipeline
 
-        return StructType([
-            StructField(name, pipeline._spark_dtype(t))
-            for name, t in self._cols()
-        ])
+        return StructType([pipeline._out_field(name, t)
+                           for name, t in self._cols()])
 
     def reader(self, schema: StructType) -> ColcodecReader:
-        return ColcodecReader(self.options["path"], self._cols())
+        """schema is schema() above, or the user's .schema(...): a
+        subset of the store's columns, each with the store's type, read
+        in the order given (the projection — Spark 4.1 does not prune a
+        Python source's columns on .select())."""
+        from parquet_go_spark.plans import pipeline
+
+        types = dict(self._cols())
+        cols = [(f.name, types.get(f.name)) for f in schema.fields]
+        bad = [f.simpleString() for f, (_, t) in zip(schema.fields, cols)
+               if t is None or f.dataType.simpleString()
+               != pipeline._spark_dtype(t).simpleString()]
+        if bad or not cols:
+            raise ValueError(
+                "colcodec: a read schema names store columns with their "
+                f"store types; got {bad or 'no fields'}, the store has "
+                f"{self._cols()}")
+        return ColcodecReader(self.options["path"], cols)
 
     def streamReader(self, schema: StructType):  # noqa: N802
         return ColcodecStreamReader(self.options["path"], self._cols())

@@ -119,3 +119,62 @@ def test_compact_unifies_nested_columns(spark, tmp_path_factory):
     assert filled.where(F.size("attrs") != 0).count() == 0
     kept = dec.where(F.col("k") >= 100).first()
     assert kept["tags"] == ["t1", "t2"] and kept["attrs"] == {"a": "1"}
+
+
+def test_compact_export_inherits_lz4(spark, tmp_path):
+    """Merged files keep the sources' LZ4 codec (pyarrow reports
+    LZ4_RAW, id 7, as "LZ4"), not UNCOMPRESSED."""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    from parquet_go_spark.interop.compact import compact_export
+    from parquet_go_spark.interop.export import export_parquet
+
+    df = spark.createDataFrame(
+        [(i, f"g{i % 40}", f"v{i}") for i in range(4000)],
+        "k bigint, grp string, v string")
+    out = str(tmp_path / "lz4cmp")
+    export_parquet(spark, df, out, repo_col="grp", salt_cols=["k"],
+                   compression="lz4_raw")
+    before = set(glob.glob(out + "/*.parquet"))
+    compact_export(spark, out, small_bytes=4 << 20, target_bytes=2 << 20)
+    merged = set(glob.glob(out + "/*.parquet")) - before
+    assert merged
+    for f in merged:
+        md = pq.ParquetFile(f).metadata
+        assert md.row_group(0).column(0).compression == "LZ4"
+    assert pq.read_table(out).num_rows == 4000
+
+
+def test_inherit_codec_ids(tmp_path, monkeypatch):
+    """Each footer codec id maps to the writer name that reproduces it;
+    an id the writer cannot write raises instead of merging the file
+    UNCOMPRESSED."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    import pytest
+
+    from parquet_go_spark.codecs.kinds import Kind
+    from parquet_go_spark.interop import pqwriter
+    from parquet_go_spark.interop.compact import _codec_name, _inherit_props
+
+    def inherited(path):
+        return _codec_name(_inherit_props(path, None)[0], path)
+
+    p = str(tmp_path / "a.parquet")
+    for name in ("lz4", "snappy", "gzip", "zstd", "brotli", "none"):
+        pq.write_table(pa.table({"a": list(range(100))}), p,
+                       compression=name)
+        want = {"lz4": "lz4_raw", "none": None}.get(name, name)
+        assert inherited(p) == want, name
+    cols = [pqwriter.ColumnSpec("a", Kind.INT64, np.arange(100))]
+    for name in ("lz4_legacy", "lz4_raw", None):
+        pqwriter.write_table(p, cols, compression=name)
+        assert inherited(p) == name
+    # a footer declaring LZO (id 3) over uncompressed pages
+    monkeypatch.setitem(pqwriter._COMPRESSION, None, 3)
+    pqwriter.write_table(p, cols)
+    with pytest.raises(ValueError, match="codec id 3"):
+        inherited(p)

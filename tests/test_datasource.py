@@ -115,6 +115,76 @@ def test_datasource_partition_per_file(spark, store):
     assert len(parts) == len(files) > 0
 
 
+def test_user_schema_projects_columns(spark, store):
+    """.schema(<subset>) returns exactly those columns, in that order,
+    with pushed filters still pruning and exact."""
+    d, src = store
+    df = (spark.read.format("colcodec").schema("price double, k bigint")
+          .load(d))
+    assert df.columns == ["price", "k"]
+    got = sorted(map(tuple, df.where(F.col("k") < 50).collect()))
+    exp = sorted(map(tuple, src.where(F.col("k") < 50)
+                     .select("price", "k").collect()))
+    assert got == exp
+    assert df.count() == src.count()
+
+
+def test_reader_projection_reads_only_requested_blobs(store, monkeypatch):
+    """A subset schema reaches reader(): only the requested columns'
+    blob rows are read, with and without pushed filters."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.datasource import LessThan
+    from pyspark.sql.types import StructType
+
+    from parquet_go_spark.sources.datasource import ColcodecDataSource
+
+    d, _ = store
+    blob_cols = []
+    real_read = pq.read_table
+
+    def spy(path, *a, **kw):
+        tbl = real_read(path, *a, **kw)
+        if "blob" in tbl.column_names:
+            blob_cols.extend(tbl.column("column").to_pylist())
+        return tbl
+
+    monkeypatch.setattr(pq, "read_table", spy)
+    schema = StructType.fromDDL("name string, k bigint")
+    for pushed in ([], [LessThan(("k",), 50)]):
+        blob_cols.clear()
+        r = ColcodecDataSource({"path": d}).reader(schema)
+        r.pushFilters(pushed)
+        out = pa.Table.from_batches(
+            [b for p in r.partitions() for b in (r.read(p) or [])])
+        assert out.column_names == ["name", "k"]
+        assert blob_cols and set(blob_cols) == {"name", "k"}
+        if pushed:
+            assert set(range(50)) <= set(out.column("k").to_pylist())
+        else:
+            assert out.num_rows == 4000
+
+
+def test_user_schema_mismatch_raises(spark, store):
+    """An unknown column or a type other than the store's is rejected
+    when the reader is built, before any task runs."""
+    from pyspark.sql.types import StructType
+
+    from parquet_go_spark.sources.datasource import ColcodecDataSource
+
+    d, _ = store
+    src = ColcodecDataSource({"path": d})
+    with pytest.raises(ValueError, match=r"got \['nope:string'\]"):
+        src.reader(StructType.fromDDL("k bigint, nope string"))
+    with pytest.raises(ValueError, match=r"got \['k:int'\]"):
+        src.reader(StructType.fromDDL("k int"))
+    with pytest.raises(ValueError, match="got no fields"):
+        src.reader(StructType([]))
+    with pytest.raises(Exception, match="nope:bigint"):
+        spark.read.format("colcodec").schema("nope bigint").load(d) \
+            .collect()
+
+
 @pytest.fixture(scope="module")
 def typed_store(spark, tmp_path_factory):
     """Columns in every physical kind the pruner touches: int32 with

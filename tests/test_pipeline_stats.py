@@ -58,8 +58,50 @@ def test_pruned_decode_matches_filter(spark, orders_blobs):
     assert got == want
 
 
-def test_pruned_decode_skips_chunks(spark, orders_blobs):
-    out, _ = orders_blobs
+_BAD_BLOB = b"not-a-colcodec-chunk"
+
+
+def _poison_refuted(src: str, dst: str, refuted) -> set:
+    """Copy the store at src to dst, then overwrite with invalid bytes
+    every blob cell of every chunk whose manifest values-stream row
+    for the probed column makes refuted(row) true. Returns the poisoned
+    chunk ids. A read that decodes any of them raises."""
+    import os
+    import shutil
+
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    # without Hadoop's .crc sidecars, which the rewrite would invalidate
+    shutil.copytree(src, dst, ignore=shutil.ignore_patterns("*.crc"))
+    files = [os.path.join(dst, f) for f in os.listdir(dst)
+             if f.endswith(".parquet") and not f.startswith(("_", "."))]
+    bad = set()
+    for f in files:
+        meta = pq.read_table(f, filters=[("stream", "=", "values")])
+        bad |= {r["chunk_id"] for r in meta.to_pylist() if refuted(r)}
+    for f in files:
+        tbl = pq.read_table(f)
+        hit = pc.is_in(tbl.column("chunk_id"),
+                       value_set=pa.array(sorted(bad), pa.string()))
+        blob = pc.if_else(hit, pa.scalar(_BAD_BLOB, pa.binary()),
+                          tbl.column("blob"))
+        i = tbl.schema.get_field_index("blob")
+        pq.write_table(tbl.set_column(i, tbl.schema.field(i), blob), f)
+    return bad
+
+
+def _rows(df, cols):
+    return sorted(tuple(r[c] for c in cols) for r in df.collect())
+
+
+def test_pruned_decode_skips_chunks(spark, orders_blobs, tmp_path):
+    from parquet_go_spark.codecs import bloom as bloomlib
+    from parquet_go_spark.codecs import chunk as chunklib
+    from parquet_go_spark.sources import datasource
+
+    out, df = orders_blobs
     m = pipeline.manifest(spark, out)
     total_chunks = m.select("chunk_id").distinct().count()
     # a narrow range must decode fewer chunks than the total
@@ -71,6 +113,61 @@ def test_pruned_decode_skips_chunks(spark, orders_blobs):
         & (F.col("max_val").cast("double") >= 1)
     ).select("chunk_id").distinct().count()
     assert lo_hi <= total_chunks  # pruning has something to skip or not; sanity
+
+    # Tripwire: poison the blobs of every chunk the manifest refutes.
+    # The reads below stay exact only if no refuted chunk is decoded.
+    with pytest.raises(ValueError):
+        chunklib.decode_chunk(_BAD_BLOB)
+    datasource.register(spark)
+    cols = ["o_orderkey", "o_custkey", "o_totalprice"]
+
+    # each chunk spans nearly the whole key range (hash layout), so
+    # probe the ends: [1, 3] is refuted by some chunks' min, [1492,
+    # 1499] by some chunks' max
+    for lo, hi in ((1, 3), (1492, 1499)):
+        def refutes_range(r):
+            if r["column"] != "o_orderkey":
+                return False
+            return ((r["max_val"] is not None and int(r["max_val"]) < lo)
+                    or (r["min_val"] is not None and int(r["min_val"]) > hi))
+
+        ranged = str(tmp_path / f"range{lo}")
+        poisoned = _poison_refuted(out, ranged, refutes_range)
+        assert 0 < len(poisoned) < total_chunks
+        want = _rows(df.where(F.col("o_orderkey").between(lo, hi)), cols)
+        assert want
+        assert _rows(pipeline.pruned_decode(
+            spark, ranged, "o_orderkey", lo=lo, hi=hi), cols) == want
+        assert _rows(pipeline.pruned_decode(
+            spark, ranged, "o_orderkey", lo=lo, hi=hi,
+            columns_subset=["o_custkey", "o_totalprice"]), cols) == want
+        assert _rows(spark.read.format("colcodec").load(ranged)
+                     .where(F.col("o_orderkey").between(lo, hi)),
+                     cols) == want
+
+    key = df.select("o_custkey").head()[0]
+
+    def refutes_key(r):
+        if r["column"] != "o_custkey":
+            return False
+        if r["bloom"] is not None and not bloomlib.might_contain(
+                r["bloom"], np.array([key], np.int64), r["kind"])[0]:
+            return True
+        return ((r["max_val"] is not None and int(r["max_val"]) < key)
+                or (r["min_val"] is not None and int(r["min_val"]) > key))
+
+    pointed = str(tmp_path / "point")
+    poisoned = _poison_refuted(out, pointed, refutes_key)
+    assert 0 < len(poisoned) < total_chunks
+    want = _rows(df.where(F.col("o_custkey") == key), cols)
+    assert want
+    assert _rows(pipeline.bloom_point_decode(
+        spark, pointed, "o_custkey", key), cols) == want
+    assert _rows(pipeline.bloom_point_decode(
+        spark, pointed, "o_custkey", key,
+        columns_subset=["o_orderkey", "o_totalprice"]), cols) == want
+    assert _rows(spark.read.format("colcodec").load(pointed)
+                 .where(F.col("o_custkey") == key), cols) == want
 
 
 def test_column_projection(spark, orders_blobs):

@@ -1094,6 +1094,28 @@ def test_encrypted_write_plaintext_columns_and_direct_keys(tmp_path):
     assert r.read_table(p, decryption=dec).cast(want.schema).equals(want)
 
 
+def test_encrypted_write_rejects_unknown_key_columns(tmp_path):
+    """A column_keys or plaintext_columns name that matches no leaf
+    raises instead of falling back to the footer key; nothing is
+    written."""
+    import os
+
+    from parquet_go_spark.interop import pqcrypt
+    from parquet_go_spark.interop.pqwriter import write_table
+
+    cols, _ = _enc_write_cols()
+    p = str(tmp_path / "typo.parquet")
+    for enc in (
+        pqcrypt.FileEncryption(footer_key=FOOTER_KEY,
+                               column_keys={"xx": COL_KEY}),
+        pqcrypt.FileEncryption(footer_key=FOOTER_KEY,
+                               plaintext_columns={"why"}),
+    ):
+        with pytest.raises(ValueError, match="name no leaf column"):
+            write_table(p, cols, encryption=enc)
+        assert not os.path.exists(p)
+
+
 def test_encrypted_write_negatives(tmp_path):
     """Wrong key and ciphertext tampering both fail GCM auth; the
     supply-aad-prefix mode refuses to read without the caller prefix;
