@@ -199,11 +199,11 @@ def _unscaled(value, scale: int) -> int | None:
         ctx.prec = 60
         try:
             scaled = Decimal(str(value)).scaleb(scale)
-        except decimal.InvalidOperation:
-            return None
-        if scaled != scaled.to_integral_value():
-            return None
-        return int(scaled)
+            if scaled != scaled.to_integral_value():
+                return None
+            return int(scaled)
+        except (decimal.InvalidOperation, OverflowError):
+            return None  # not a number, or infinite
 
 
 def _decimal_kind(precision: int) -> int:
@@ -1468,14 +1468,23 @@ def decode_table(spark: SparkSession, out_path: str,
 
 
 def _store_read(spark: SparkSession, out_path: str, column: str,
-                columns_subset: list[str] | None) -> DataFrame:
-    """A fresh spark.read.format("colcodec") DataFrame over the store
+                columns_subset: list[str] | None, cond) -> DataFrame:
+    """`cond` over a fresh spark.read.format("colcodec") DataFrame
     (one per call: see the Spark 4.1 caveat in sources/datasource.py).
     columns_subset (plus the probed column) becomes the read schema,
     which the source uses as its projection; names the store lacks are
-    dropped, as decode_table does."""
+    dropped, as decode_table does.
+
+    `column IS NOT NULL`, which cond implies, is applied too: it is
+    always pushed, so every query over the result pushes filters and
+    replans the source's partitions. With no cond (an unbounded range)
+    nothing would be pushed and nothing pruned, so the result is the
+    plain decode_table plan, which is safe to reuse."""
     from parquet_go_spark.sources import datasource
 
+    if cond is None:
+        return decode_table(spark, out_path, None if columns_subset is None
+                            else [*columns_subset, column])
     datasource.register(spark)
     reader = spark.read.format("colcodec")
     if columns_subset is not None:
@@ -1484,7 +1493,25 @@ def _store_read(spark: SparkSession, out_path: str, column: str,
             _out_field(c, t) for c, t in _read_schema_sidecar(out_path)
             if c in keep
         ]))
-    return reader.load(out_path)
+    return reader.load(out_path).where(F.col(column).isNotNull() & cond)
+
+
+def _typed_lit(col_type: str, value):
+    """Literal for comparing `value` with a column of col_type. Spark
+    compares a decimal column with a str or float literal in double,
+    casting the column, and such a filter is not pushed. When the value
+    is exact at the column's scale and the precision is at most 15
+    digits, that double comparison orders exactly as the decimal one,
+    so the literal becomes a Decimal and the filter is pushed."""
+    from decimal import Decimal
+
+    dp = _decimal_info(col_type)
+    u = None
+    if dp is not None and dp[0] <= 15 and isinstance(value, (str, float)):
+        u = _unscaled(value, dp[1])
+    if u is None or abs(u) >= 10 ** dp[0]:  # inexact, or out of range
+        return F.lit(value)
+    return F.lit(Decimal(u).scaleb(-dp[1]))  # exactly the column's scale
 
 
 def bloom_point_decode(
@@ -1501,16 +1528,26 @@ def bloom_point_decode(
 
     array<scalar> columns filter by membership (array_contains). Spark
     4.1 cannot push that filter to a Python source, so such lookups are
-    exact but decode every chunk."""
+    exact but decode every chunk. Nor does it push a comparison that
+    casts the column; a decimal column wider than 15 digits probed with
+    a str or float is exact but not pruned.
+
+    Reading through the source sets the session's
+    spark.sql.python.filterPushdown.enabled (see datasource.register).
+    The result may be queried again with other filters, but one query
+    must not scan it twice under different filters (a self-union or
+    self-join): Spark 4.1 plans both scans with the last pushed
+    filters. Call this function once per scan instead."""
     col_type = dict(_read_schema_sidecar(out_path))[column]
     elem = _list_elem(col_type)
     if elem is not None and _is_container(elem):
         raise ValueError(
             f"bloom_point_decode: no scalar bloom stream for {col_type}")
-    out = _store_read(spark, out_path, column, columns_subset)
     if elem is not None:
-        return out.where(F.array_contains(F.col(column), F.lit(value)))
-    return out.where(F.col(column) == F.lit(value))
+        cond = F.array_contains(F.col(column), F.lit(value))
+    else:
+        cond = F.col(column) == _typed_lit(col_type, value)
+    return _store_read(spark, out_path, column, columns_subset, cond)
 
 
 def pruned_decode(
@@ -1524,14 +1561,20 @@ def pruned_decode(
     """`lo <= column <= hi` over the colcodec source, which decodes only
     chunks whose [min_val, max_val] intersects [lo, hi]; Spark then
     applies the exact row filter — the analog of page skipping via the
-    column index (search.go:6-95, column_index.go)."""
-    out = _store_read(spark, out_path, column, columns_subset)
+    column index (search.go:6-95, column_index.go). With neither bound
+    this is decode_table.
+
+    Spark 4.1 does not push a comparison that casts the column; a
+    decimal column wider than 15 digits bounded by a str or float is
+    exact but not pruned. The session-config and self-union caveats of
+    bloom_point_decode apply here too."""
+    col_type = dict(_read_schema_sidecar(out_path))[column]
     c = F.col(column)
-    if lo is not None:
-        out = out.where(c >= F.lit(lo))
+    cond = None if lo is None else c >= _typed_lit(col_type, lo)
     if hi is not None:
-        out = out.where(c <= F.lit(hi))
-    return out
+        le = c <= _typed_lit(col_type, hi)
+        cond = le if cond is None else cond & le
+    return _store_read(spark, out_path, column, columns_subset, cond)
 
 
 def _fill_expr(typ: str):

@@ -28,14 +28,16 @@ SPARK 4.1 CAVEAT (upstream, applies to EVERY python data source with
 ``spark.sql.python.filterPushdown.enabled``): the JVM caches planned
 partitions per relation (``PythonDataSourceV2.readInfo``) and filter
 pushdown overwrites that cache, so a DataFrame OBJECT reused across
-queries serves the first pushed query's pruned scan to a later query
+queries serves the last pushed query's pruned scan to a later query
 that pushes nothing — silently losing rows even though Spark applies
 the later filter exactly (the pruned-away chunks never reach it).
+Within one query, every scan of the relation gets the last pushed
+filters, so ``df.union(df.where(...))`` loses rows the same way.
 Reproduced with a minimal 20-line source; our filters already ride
 inside each InputPartition, so no reader state is involved. Create
-the DataFrame per query (``spark.read.format("colcodec").load(p)``
-is a driver-side listing, milliseconds). Pinned in tests so a Spark
-fix is noticed.
+the DataFrame per query and per scan
+(``spark.read.format("colcodec").load(p)`` is a driver-side listing,
+milliseconds). Pinned in tests so a Spark fix is noticed.
 """
 
 from __future__ import annotations
@@ -59,7 +61,7 @@ from pyspark.sql.datasource import (
     LessThanOrEqual,
     WriterCommitMessage,
 )
-from pyspark.sql.types import StructType
+from pyspark.sql.types import StructField, StructType
 
 
 @dataclass
@@ -74,16 +76,55 @@ class _FileSlice(InputPartition):
     filters: tuple = ()
 
 
-def _decode_blob_table(tbl, cols):
-    """Decode a table of blob rows through the one-chunk-at-a-time
-    kernel — shared by the batch reader and the streaming source."""
+def _decode_file(path: str, cols, keep=None):
+    """Decode the chunks of one blob file (those in keep, or all)
+    through the one-chunk-at-a-time kernel; only the blob rows of the
+    columns in cols are decoded. Shared by the batch reader and the
+    streaming source.
+
+    A row-level dataset filter on chunk_id and column counts each
+    wanted chunk's blob rows. The file is then read one row group at a
+    time, a row group holding no wanted blob row has only its chunk_id
+    and column cells read, and each chunk goes to the kernel once its
+    last blob row has been read. So memory holds one row group plus the
+    chunks not yet complete: a chunk or two when the file keeps each
+    chunk's rows together, as encode_table and this source's writer
+    do."""
+    from collections import Counter
+
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
     from parquet_go_spark.plans import pipeline
 
-    if tbl.num_rows == 0:
-        return
-    tbl = tbl.sort_by("chunk_id")  # kernel holds one chunk at a time
-    decode = pipeline._decode_stream_fn(cols)
-    yield from decode(tbl.to_batches())
+    names = [c for c, _ in cols]
+    rows = [("column", "in", names)]
+    if keep is not None:
+        rows.append(("chunk_id", "in", sorted(keep)))
+    need = Counter(pq.read_table(path, columns=["chunk_id"], filters=rows)
+                   .column(0).to_pylist())
+    names = pa.array(names, pa.string())
+    ids = pa.array(list(need), pa.string())
+    pf = pq.ParquetFile(path)
+
+    def chunks():
+        pending: dict[str, list] = {}
+        for i in range(pf.num_row_groups):
+            meta = pf.read_row_group(i, columns=["chunk_id", "column"])
+            mask = pc.and_(pc.is_in(meta["column"], value_set=names),
+                           pc.is_in(meta["chunk_id"], value_set=ids))
+            if not pc.any(mask).as_py():
+                continue  # the blob bytes stay unread
+            tbl = pf.read_row_group(i, columns=[
+                "chunk_id", "column", "stream", "n_rows", "blob"])
+            for batch in tbl.filter(mask).to_batches():
+                for j, cid in enumerate(batch["chunk_id"].to_pylist()):
+                    pending.setdefault(cid, []).append(batch.slice(j, 1))
+                    if len(pending[cid]) == need[cid]:
+                        yield from pending.pop(cid)
+
+    yield from pipeline._decode_stream_fn(cols)(chunks())
 
 
 def _stat_key(spark_type: str, stat: str):
@@ -286,10 +327,6 @@ def _anchor_tz(col_type: str, value):
     return value
 
 
-_COMPARE_OPS = {EqualTo: "eq", GreaterThan: "gt", GreaterThanOrEqual: "gte",
-                LessThan: "lt", LessThanOrEqual: "lte"}
-
-
 def _translate_filters(filters, col_types):
     """Spark Filter objects → picklable (col, op, value) triples for the
     columns/types we can prune on. Unsupported filters are ignored here
@@ -307,10 +344,18 @@ def _translate_filters(filters, col_types):
             # no literal: prunes on the manifest's null_count alone
             out.append((col, "isnull" if isinstance(f, IsNull)
                         else "notnull", None))
+        elif isinstance(f, EqualTo):
+            out.append((col, "eq", _anchor_tz(t, f.value)))
         elif isinstance(f, In):
             out.append((col, "in", _anchor_tz(t, list(f.value))))
-        elif type(f) in _COMPARE_OPS:
-            out.append((col, _COMPARE_OPS[type(f)], _anchor_tz(t, f.value)))
+        elif isinstance(f, GreaterThan):
+            out.append((col, "gt", _anchor_tz(t, f.value)))
+        elif isinstance(f, GreaterThanOrEqual):
+            out.append((col, "gte", _anchor_tz(t, f.value)))
+        elif isinstance(f, LessThan):
+            out.append((col, "lt", _anchor_tz(t, f.value)))
+        elif isinstance(f, LessThanOrEqual):
+            out.append((col, "lte", _anchor_tz(t, f.value)))
     return out
 
 
@@ -321,10 +366,11 @@ class ColcodecReader(DataSourceReader):
         self._filters: list[tuple[str, str, object]] = []
 
     def pushFilters(self, filters):
-        from parquet_go_spark.plans import pipeline
-
-        scalar_types = {c: t for c, t in self._cols
-                        if not pipeline._is_container(t)}
+        scalar_types = {
+            c: t for c, t in self._cols
+            if not (t.startswith("array<") or t.startswith("map<")
+                    or t.startswith("struct<"))
+        }
         self._filters = _translate_filters(filters, scalar_types)
         # we only SKIP chunks; Spark must still evaluate every filter
         # exactly (bloom fpp / truncated bounds admit false positives).
@@ -356,9 +402,8 @@ class ColcodecReader(DataSourceReader):
         if partition is None:  # empty store: Spark passes one None slice
             return
 
+        keep = None
         col_types = dict(self._cols)
-        # projection: blob rows of unrequested columns are never read
-        blob_rows = [("column", "in", [c for c, _ in self._cols])]
         if partition.filters:
             # metadata columns only — the blob column (the file's bulk)
             # is not touched until chunks survive; bloom bitsets are
@@ -383,10 +428,10 @@ class ColcodecReader(DataSourceReader):
             for row in meta.to_pylist():  # blob-row count: metadata scale
                 st, bl, nu = per_chunk.setdefault(
                     row["chunk_id"], ({}, {}, {}))
-                c = row["column"]
-                st[c] = (row.get("min_val"), row.get("max_val"))
-                bl[c] = row.get("bloom")
-                nu[c] = (row["null_count"], row["n_rows"])
+                if not null_only:
+                    st[row["column"]] = (row["min_val"], row["max_val"])
+                    bl[row["column"]] = row["bloom"]
+                nu[row["column"]] = (row["null_count"], row["n_rows"])
             keep = {
                 cid for cid, (st, bl, nu) in per_chunk.items()
                 if _chunk_survives(partition.filters, col_types, st, bl, nu)
@@ -398,15 +443,7 @@ class ColcodecReader(DataSourceReader):
             keep |= {cid for cid in all_ids if cid not in per_chunk}
             if not keep:
                 return  # every chunk refuted by stats/bloom
-            # row-level dataset filter: refuted chunks' blob rows are
-            # dropped during the scan, not materialized then discarded
-            tbl = pq.read_table(
-                partition.path,
-                filters=[("chunk_id", "in", sorted(keep))] + blob_rows,
-            )
-        else:
-            tbl = pq.read_table(partition.path, filters=blob_rows)
-        yield from _decode_blob_table(tbl, self._cols)
+        yield from _decode_file(partition.path, self._cols, keep)
 
 
 class ColcodecDataSource(DataSource):
@@ -427,8 +464,10 @@ class ColcodecDataSource(DataSource):
     def schema(self) -> StructType:
         from parquet_go_spark.plans import pipeline
 
-        return StructType([pipeline._out_field(name, t)
-                           for name, t in self._cols()])
+        return StructType([
+            StructField(name, pipeline._spark_dtype(t))
+            for name, t in self._cols()
+        ])
 
     def reader(self, schema: StructType) -> ColcodecReader:
         """schema is schema() above, or the user's .schema(...): a
@@ -909,10 +948,7 @@ class ColcodecStreamReader(DataSourceStreamReader):
         return [_FileSlice(os.path.join(self._path, f)) for f in new]
 
     def read(self, partition: _FileSlice):
-        import pyarrow.parquet as pq
-
-        yield from _decode_blob_table(
-            pq.read_table(partition.path), self._cols)
+        yield from _decode_file(partition.path, self._cols)
 
     def commit(self, end: dict) -> None:
         pass  # nothing to clean: offsets are self-contained watermarks

@@ -131,9 +131,9 @@ def test_user_schema_projects_columns(spark, store):
 
 def test_reader_projection_reads_only_requested_blobs(store, monkeypatch):
     """A subset schema reaches reader(): only the requested columns'
-    blob rows are read, with and without pushed filters."""
+    blob rows reach the decode kernel, with and without pushed
+    filters."""
     import pyarrow as pa
-    import pyarrow.parquet as pq
     from pyspark.sql.datasource import LessThan
     from pyspark.sql.types import StructType
 
@@ -141,15 +141,19 @@ def test_reader_projection_reads_only_requested_blobs(store, monkeypatch):
 
     d, _ = store
     blob_cols = []
-    real_read = pq.read_table
+    real_kernel = pipeline._decode_stream_fn
 
-    def spy(path, *a, **kw):
-        tbl = real_read(path, *a, **kw)
-        if "blob" in tbl.column_names:
-            blob_cols.extend(tbl.column("column").to_pylist())
-        return tbl
+    def spy(cols):
+        decode = real_kernel(cols)
 
-    monkeypatch.setattr(pq, "read_table", spy)
+        def fed(batches):
+            for b in batches:
+                blob_cols.extend(b.column("column").to_pylist())
+                yield b
+
+        return lambda batches: decode(fed(batches))
+
+    monkeypatch.setattr(pipeline, "_decode_stream_fn", spy)
     schema = StructType.fromDDL("name string, k bigint")
     for pushed in ([], [LessThan(("k",), 50)]):
         blob_cols.clear()
@@ -163,6 +167,46 @@ def test_reader_projection_reads_only_requested_blobs(store, monkeypatch):
             assert set(range(50)) <= set(out.column("k").to_pylist())
         else:
             assert out.num_rows == 4000
+
+
+def test_decode_file_reads_one_row_group_at_a_time(store, tmp_path,
+                                                   monkeypatch):
+    """A blob file is read row group by row group: the first chunk is
+    decoded while later row groups are still unread (the kernel emits a
+    chunk when the next one starts), and a row group whose chunks are
+    all refuted never has its blob cells read."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    d, _ = store
+    tbl = pa.concat_tables(
+        [pq.read_table(os.path.join(d, f)) for f in sorted(os.listdir(d))
+         if f.endswith(".parquet")]).sort_by("chunk_id")
+    ids = sorted(set(tbl["chunk_id"].to_pylist()))
+    assert len(ids) >= 4
+    path = str(tmp_path / "rg.parquet")
+    with pq.ParquetWriter(path, tbl.schema) as w:
+        for cid in ids:  # one row group per chunk
+            w.write_table(tbl.filter(pc.equal(tbl["chunk_id"], cid)))
+    blob_reads = []
+    real = pq.ParquetFile.read_row_group
+
+    def spy(self, i, columns=None, **kw):
+        if "blob" in columns:
+            blob_reads.append(i)
+        return real(self, i, columns=columns, **kw)
+
+    monkeypatch.setattr(pq.ParquetFile, "read_row_group", spy)
+    batches = datasource._decode_file(
+        path, pipeline._read_schema_sidecar(d), keep=set(ids[1:]))
+    first = next(batches)
+    assert blob_reads == [1, 2]
+    n = first.num_rows + sum(b.num_rows for b in batches)
+    assert blob_reads == list(range(1, len(ids)))
+    kept = tbl.filter(pc.and_(pc.equal(tbl["column"], "k"),
+                              pc.not_equal(tbl["chunk_id"], ids[0])))
+    assert n == pc.sum(kept["n_rows"]).as_py()
 
 
 def test_user_schema_mismatch_raises(spark, store):
@@ -562,8 +606,9 @@ def test_python_ds_relation_reuse_upstream_caveat(spark, tmp_path):
     partitions per relation (PythonDataSourceV2.readInfo) and filter
     pushdown overwrites the cache — so a REUSED DataFrame serves the
     first pushed query's pruned scan to a later query that pushes
-    nothing. Demonstrated on a minimal source with NO instance state,
-    proving it is not this package's reader. If this test starts
+    nothing, and one query scanning it twice plans both scans with the
+    last pushed filters. Demonstrated on a minimal source with NO
+    instance state, proving it is not this package's reader. If this test starts
     failing on a future Spark, the caching was fixed: delete the
     caveat from sources/datasource.py + sources/pqread.py docstrings
     and this pin."""
@@ -606,6 +651,8 @@ def test_python_ds_relation_reuse_upstream_caveat(spark, tmp_path):
         assert df.where("k = 3").count() == 1
         # UPSTREAM BUG: reused relation serves the pruned scan (≠ 10)
         assert df.count() == 1
+        # and within one query both scans get the last push (≠ 11)
+        assert df.union(df.where("k = 3")).count() == 2
         # the safe pattern: a fresh relation per query is exact
         assert spark.read.format(
             "minids_upstream_pin").load().count() == 10

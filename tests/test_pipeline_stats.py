@@ -96,7 +96,25 @@ def _rows(df, cols):
     return sorted(tuple(r[c] for c in cols) for r in df.collect())
 
 
-def test_pruned_decode_skips_chunks(spark, orders_blobs, tmp_path):
+@pytest.fixture(scope="module")
+def typed_blobs(spark, tmp_path_factory):
+    """Small chunks over k-sorted rows, so every column's chunk bounds
+    are narrow and both ends of each range refute chunks."""
+    out = str(tmp_path_factory.mktemp("enc") / "typed")
+    df = spark.range(3000).select(
+        (F.col("id") % 4).cast("string").alias("repo"),
+        F.col("id").alias("k"),
+        (F.col("id") + 0.25).cast("decimal(10,2)").alias("dec"),
+        (F.col("id") / 2).cast("float").alias("f32"),
+        F.array((F.col("id") % 50).cast("int")).alias("arr"),
+    )
+    pipeline.encode_table(spark, df, out, repo_col="repo", sort_cols=["k"],
+                          resume=False, target_chunk_bytes=2000)
+    return out, df
+
+
+def test_pruned_decode_skips_chunks(spark, orders_blobs, typed_blobs,
+                                    tmp_path):
     from parquet_go_spark.codecs import bloom as bloomlib
     from parquet_go_spark.codecs import chunk as chunklib
     from parquet_go_spark.sources import datasource
@@ -168,6 +186,66 @@ def test_pruned_decode_skips_chunks(spark, orders_blobs, tmp_path):
         columns_subset=["o_orderkey", "o_totalprice"]), cols) == want
     assert _rows(spark.read.format("colcodec").load(pointed)
                  .where(F.col("o_custkey") == key), cols) == want
+
+    # literals Spark compares in another type: a decimal column bounded
+    # by a str and by a float, and a float column by a Python float
+    out, df = typed_blobs
+    cols = ["k", "dec", "f32"]
+    n_chunks = pipeline.manifest(spark, out).select(
+        "chunk_id").distinct().count()
+    cases = [("dec", "7.25", "9.250", lambda v: int(v) / 100),
+             ("dec", 2990.25, None, lambda v: int(v) / 100),
+             ("f32", 1.5, 4.0, float)]
+    for i, (col, lo, hi, stat) in enumerate(cases):
+        def refutes(r, col=col, lo=lo, hi=hi, stat=stat):
+            if r["column"] != col:
+                return False
+            return ((r["max_val"] is not None
+                     and stat(r["max_val"]) < float(lo))
+                    or (hi is not None and r["min_val"] is not None
+                        and stat(r["min_val"]) > float(hi)))
+
+        store = str(tmp_path / f"typed{i}")
+        poisoned = _poison_refuted(out, store, refutes)
+        assert 0 < len(poisoned) < n_chunks
+        want_df = df.where(F.col(col) >= F.lit(lo))
+        if hi is not None:
+            want_df = want_df.where(F.col(col) <= F.lit(hi))
+        want = _rows(want_df, cols)
+        assert want
+        assert _rows(pipeline.pruned_decode(
+            spark, store, col, lo=lo, hi=hi), cols) == want, (col, lo, hi)
+    store = str(tmp_path / "typed_point")
+    _poison_refuted(out, store, lambda r: r["column"] == "dec" and (
+        int(r["max_val"]) < 72525 or int(r["min_val"]) > 72525))
+    assert _rows(pipeline.bloom_point_decode(spark, store, "dec", "725.25"),
+                 cols) == _rows(df.where("k = 725"), cols)
+
+
+def test_wrapper_results_reusable(spark, typed_blobs):
+    """A wrapper's result queried once with a pushed filter, then again
+    with none, returns the oracle rows both times: Spark 4.1 replans a
+    Python source's partitions only when a query pushes filters."""
+    out, df = typed_blobs
+    cases = [
+        (pipeline.bloom_point_decode(spark, out, "arr", 7),
+         df.where(F.array_contains("arr", 7))),
+        (pipeline.bloom_point_decode(spark, out, "k", 2000),
+         df.where("k = 2000")),
+        (pipeline.pruned_decode(spark, out, "k"), df),
+        (pipeline.pruned_decode(spark, out, "k", columns_subset=["dec"]),
+         df.select("dec", "k")),
+        (pipeline.pruned_decode(spark, out, "k", lo=100, hi=2500),
+         df.where("k BETWEEN 100 AND 2500")),
+        (pipeline.pruned_decode(spark, out, "dec", lo="100.25"),
+         df.where(F.col("dec") >= F.lit("100.25"))),
+    ]
+    for got, want in cases:
+        cols = got.columns
+        for cond in ("k < 3000", "k = 2007"):
+            assert _rows(got.where(cond), cols) == \
+                _rows(want.where(cond), cols), cond
+        assert _rows(got, cols) == _rows(want, cols)
 
 
 def test_column_projection(spark, orders_blobs):
