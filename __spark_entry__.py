@@ -12,7 +12,7 @@ Queries map SURVEY.md §2's operator inventory onto the driver's
 - dedup/minhash/simhash/ngram  training-data dedup operators
 - text_analysis_*  token/quality/langid/fingerprint (one fused query)
 - cosine/knn/lsh  embedding similarity search
-- multimodal_*    binary-payload plumbing (stubbed decode)
+- multimodal_*    binary-payload metadata (size + sha256)
 """
 
 from __future__ import annotations
@@ -934,7 +934,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     individually — every operator family keeps a green row. Dropped as
     queries (still pytest-covered): rt_pipeline_orders (orders round
     trips via interop/datasource/compact), simhash_documents (subsumed
-    by simhash_pairs), multimodal_decode_stub (honest stub)."""
+    by simhash_pairs). The multimodal decode stub is deleted: it emitted
+    invented dimensions and features."""
     li_flag = lambda df: df.select((F.col("l_quantity") > 25).alias("flag"))  # noqa: E731
     return {
         # ---- pipeline round trips (encode→manifest→decode), per shape ----
@@ -1355,6 +1356,6 @@ def oracle_sql() -> dict[str, str]:
             "l_orderkey, l_linenumber) AS rank, l_orderkey, l_linenumber, "
             "l_extendedprice FROM lineitem QUALIFY rank <= 100"
         ),
-        # minhash_pairs / simhash* / lsh_ann / multimodal_decode_stub are
+        # minhash_pairs / simhash* / lsh_ann are
         # hash-construction-specific → rows-only checks (no portable SQL).
     }

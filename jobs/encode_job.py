@@ -2,16 +2,16 @@
 
 Usage (cluster or local):
 
-  spark-submit --py-files parquet_go_spark.zip jobs/encode_job.py \
-      --input /path/to/repos_table \
-      --output /path/to/blobs \
-      --repo-col repo --salt-cols path,commit --sort-cols path,commit \
+  spark-submit --py-files parquet_go_spark.zip jobs/encode_job.py \\
+      --input /path/to/repos_table \\
+      --output /path/to/blobs \\
+      --repo-col repo --salt-cols path,commit --sort-cols path,commit \\
       [--target-chunk-mb 8] [--compression zstd|snappy|gzip|lz4|brotli] \\
       [--layout hash|range] [--size-mode metadata|exact|sample] \\
-      [--no-resume] [--verify]
+      [--no-resume] [--verify] [--export-parquet]
 
   # or generate the deterministic synthetic input first:
-  spark-submit ... jobs/encode_job.py --generate-rows 1000000 \
+  spark-submit ... jobs/encode_job.py --generate-rows 1000000 \\
       --output /path/to/blobs
 
 The job is idempotent: completed (repo, bucket) chunks recorded in the
@@ -31,7 +31,9 @@ import time
 
 
 def parse_args(argv):
-    p = argparse.ArgumentParser(description=__doc__)
+    p = argparse.ArgumentParser(
+        description=__doc__,
+        formatter_class=argparse.RawDescriptionHelpFormatter)
     p.add_argument("--input", help="input table path (parquet)")
     p.add_argument("--generate-rows", type=int, default=0,
                    help="instead of --input, generate N synthetic repo rows")
@@ -41,11 +43,10 @@ def parse_args(argv):
     p.add_argument("--salt-cols", default="path,commit")
     p.add_argument("--sort-cols", default="path,commit")
     p.add_argument("--target-chunk-mb", type=int, default=8)
-    p.add_argument("--zstd", action="store_true",
-                   help="outer zstd compression of chunk payloads")
     p.add_argument("--compression", default=None,
                    choices=["zstd", "snappy", "gzip", "lz4", "brotli"],
-                   help="outer compression codec (supersedes --zstd)")
+                   help="outer compression codec of chunk payloads "
+                        "(default: none)")
     p.add_argument("--layout", default="hash", choices=["hash", "range"],
                    help="range = sort-key quantile buckets with disjoint "
                         "chunk key ranges (min/max pruning effective)")
@@ -96,7 +97,7 @@ def main(argv=None) -> int:
             repo_col=args.repo_col,
             salt_cols=args.salt_cols.split(","),
             sort_cols=args.sort_cols.split(",") if args.sort_cols else None,
-            compression=args.compression or ("zstd" if args.zstd else None),
+            compression=args.compression,
             target_chunk_bytes=args.target_chunk_mb << 20,
             resume=not args.no_resume,
         )
@@ -129,7 +130,6 @@ def main(argv=None) -> int:
         salt_cols=args.salt_cols.split(","),
         sort_cols=args.sort_cols.split(",") if args.sort_cols else [],
         target_chunk_bytes=args.target_chunk_mb << 20,
-        zstd=args.zstd,
         compression=args.compression,
         layout=args.layout,
         size_mode=args.size_mode,

@@ -14,7 +14,6 @@ Layout:
   operators/  training-data operators (dedup, similarity, text analysis)
   sources/    synthetic repo-table generator, testdata loaders
   plans/      the distributed encode/decode/verify pipeline + manifest
-  streaming/  foreachBatch incremental encode
 """
 
 __version__ = "0.1.0"

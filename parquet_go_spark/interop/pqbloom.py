@@ -227,7 +227,14 @@ def read_bloom_at(f, off: int, crypto=None) -> np.ndarray | None:
     BloomFilterHeader + raw bitset. Encrypted chunks (`crypto` =
     pqcrypt.ChunkCrypto) carry TWO modules: a GCM header module (type
     8) then the bitset module — GCM (type 9) in AES_GCM_V1 files, a
-    CTR data module in AES_GCM_CTR_V1 files."""
+    CTR data module in AES_GCM_CTR_V1 files. CTR bitsets are
+    unauthenticated: only the GCM header vouches for them.
+
+    Raises ValueError unless the header's numBytes is a positive
+    multiple of 32 (one block) and the plaintext or decrypted bitset
+    holds at least numBytes: a short bitset read as a smaller filter
+    would answer false negatives and drop rows. Checking against the
+    header also catches a tampered CTR length prefix."""
     if crypto is None:
         f.seek(off)
         # header ≤ ~20 B; over-read then parse
@@ -258,8 +265,13 @@ def read_bloom_at(f, off: int, crypto=None) -> np.ndarray | None:
                 mod2, 0, crypto.key,
                 pqcrypt.module_aad(crypto.file_aad, pqcrypt.BLOOM_BITSET,
                                    crypto.rg, crypto.col), "bloom bitset")
-        bits = bits[:hdr[1]]
-    return np.frombuffer(bits, dtype="<u4").reshape(-1, 8)
+    n = hdr.get(1)
+    if not isinstance(n, int) or n <= 0 or n % 32 or len(bits) < n:
+        raise ValueError(
+            f"pqbloom: bloom filter at offset {off}: header numBytes {n!r} "
+            f"is not a positive multiple of 32 or the bitset holds only "
+            f"{len(bits)} bytes")
+    return np.frombuffer(bits[:n], dtype="<u4").reshape(-1, 8)
 
 
 def _footer_chunks(path: str, decryption=None):

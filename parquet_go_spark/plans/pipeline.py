@@ -692,41 +692,31 @@ def _encode_chunk_batches(tbl: pa.Table, columns, repo: str, bucket: int,
         sub = tbl.slice(si * rows_per, rows_per)
         if sub.num_rows == 0:
             continue
-        # split tag goes BEFORE the batch suffix so streaming-resume's
-        # endswith(chunk_suffix) filter still recognizes split chunks as
-        # done on replay (a replayed micro-batch must not re-encode them)
         tag = f"s{split_offset + si}" if (n_splits > 1 or force_split) else ""
-        yield _encode_one_chunk(sub, columns, repo, bucket,
-                                compression, tag + chunk_suffix,
-                                fsst_cache=fsst_cache)
-
-
-def _encode_one_chunk(tbl: pa.Table, columns, repo: str, bucket: int,
-                      compression: str | None,
-                      chunk_suffix: str,
-                      fsst_cache: dict | None = None) -> pa.RecordBatch:
-    base = {
-        "chunk_id": f"{repo}#{bucket}{chunk_suffix}", "repo": repo,
-        "bucket": bucket, "n_rows": tbl.num_rows,
-    }
-    recs = []
-    for name, spark_type in columns:
-        b = dict(base, column=name)
-        for (stream, values, kind, leaf_type, validity,
-             de, rep) in _shred_column(tbl.column(name), spark_type):
-            recs.append(_encode_one(values, kind, leaf_type, compression,
-                                    b, stream=stream, validity=validity,
-                                    fsst_cache=fsst_cache,
-                                    def_hist=de, rep_hist=rep))
-    return pa.RecordBatch.from_pylist(recs, schema=_BLOB_ARROW_SCHEMA)
+        base = {
+            "chunk_id": f"{repo}#{bucket}{tag}{chunk_suffix}", "repo": repo,
+            "bucket": bucket, "n_rows": sub.num_rows,
+        }
+        recs = []
+        for name, spark_type in columns:
+            b = dict(base, column=name)
+            for (stream, values, kind, leaf_type, validity,
+                 de, rep) in _shred_column(sub.column(name), spark_type):
+                recs.append(_encode_one(
+                    values, kind, leaf_type, compression, b, stream=stream,
+                    validity=validity, fsst_cache=fsst_cache,
+                    def_hist=de, rep_hist=rep))
+        yield pa.RecordBatch.from_pylist(recs, schema=_BLOB_ARROW_SCHEMA)
 
 
 def _encode_stream_fn(columns: list[tuple[str, str]],
                       compression: str | None,
                       sort_cols: list[str], chunk_suffix: str = "",
                       target_bytes: int | None = None):
-    """mapInArrow encode kernel: the partition is hash-partitioned on
-    (__repo, __bucket) but NOT sorted — batch slices are accumulated per
+    """The encode kernel of every colcodec writer: encode_table runs it
+    in mapInArrow over partitions hash-partitioned on (__repo, __bucket),
+    the colcodec data-source writers over their own partitions with
+    __bucket 0. Input is NOT sorted — batch slices are accumulated per
     group in a dict. No pandas conversion and no JVM row sort anywhere:
     strings stay in Arrow buffers end to end, and ordering is a
     per-group columnar sort inside _encode_chunk_batches.
@@ -1059,7 +1049,6 @@ def _footer_stats_partition(paths):
 
 def plan_chunks(df: DataFrame, repo_col: str, salt_cols: list[str],
                 target_chunk_bytes: int = TARGET_CHUNK_BYTES,
-                exact_sizes: bool = True,
                 size_mode: str | None = None) -> DataFrame:
     """Assign every row a bounded-size (repo, bucket) chunk key.
 
@@ -1080,11 +1069,8 @@ def plan_chunks(df: DataFrame, repo_col: str, salt_cols: list[str],
         the storage layer can prune the sample read (Iceberg sample
         partitions) — with plain parquet it reads everything anyway.
       None/default — "metadata" when footer stats exist, else "exact".
-
-    exact_sizes is the legacy flag: True→default resolution, False→sample.
     """
-    if size_mode is None:
-        size_mode = "auto" if exact_sizes else "sample"
+    size_mode = size_mode or "auto"
     size_expr = _row_size_expr(df)
     avg = None
     if size_mode in ("auto", "metadata"):
@@ -1138,11 +1124,9 @@ def encode_table(
     salt_cols: list[str] | None = None,
     sort_cols: list[str] | None = None,
     target_chunk_bytes: int = TARGET_CHUNK_BYTES,
-    zstd: bool = False,
     compression: str | None = None,
     resume: bool = True,
     chunk_suffix: str = "",
-    exact_sizes: bool = True,
     size_mode: str | None = None,
     layout: str = "hash",
 ) -> dict:
@@ -1190,23 +1174,11 @@ def encode_table(
         )
     else:
         keyed = plan_chunks(df, repo_col, salt_cols, target_chunk_bytes,
-                            exact_sizes=exact_sizes, size_mode=size_mode)
+                            size_mode=size_mode)
 
     skipped = 0
     if resume and _table_exists(out_path):
-        m = manifest(spark, out_path)
-        if chunk_suffix:
-            # streaming replays: only chunks of THIS micro-batch count as
-            # done — other batches legitimately reuse (repo, bucket).
-            # Match both id layouts: current runs put the split tag
-            # BEFORE the suffix ('s0@b7'), tables written by older runs
-            # put it after ('@b7s0') — a replay must recognize both as
-            # done or it re-appends duplicate blobs
-            import re as _re
-
-            m = m.where(F.col("chunk_id").rlike(
-                _re.escape(chunk_suffix) + r"(s\d+)?$"))
-        done = m.select("repo", "bucket").distinct()
+        done = manifest(spark, out_path).select("repo", "bucket").distinct()
         cond = (keyed["__repo"] == done["repo"]) & (keyed["__bucket"] == done["bucket"])
         keyed = keyed.join(F.broadcast(done), on=cond, how="left_anti")
         skipped = done.count()
@@ -1214,8 +1186,7 @@ def encode_table(
     import time as _time
 
     t0 = _time.time()
-    comp = compression or ("zstd" if zstd else None)
-    fn = _encode_stream_fn(columns, comp, sort_cols, chunk_suffix,
+    fn = _encode_stream_fn(columns, compression, sort_cols, chunk_suffix,
                            target_bytes=target_chunk_bytes)
     # explicit partition count: AQE's advisory-size coalescing would
     # otherwise merge this shuffle into a handful of 64 MB partitions and
@@ -1667,7 +1638,11 @@ def compact_tables(
             blobs = blobs.unionByName(pdf)
         sizes = blobs.groupBy("chunk_id").agg(F.sum("raw_bytes").alias("b"))
         small_ids = sizes.where(F.col("b") < min_chunk_bytes).select("chunk_id")
-        big = blobs.join(F.broadcast(small_ids), "chunk_id", "left_anti")
+        # one task writes all of a chunk's blob rows: the input's file
+        # splits may cut a chunk between row groups, and the colcodec
+        # source decodes one file at a time
+        big = (blobs.join(F.broadcast(small_ids), "chunk_id", "left_anti")
+               .repartition("chunk_id").sortWithinPartitions("chunk_id"))
         big.write.mode("overwrite").parquet(out_path)
         _write_schema_sidecar(out_path, cols)
         n_small = small_ids.count()

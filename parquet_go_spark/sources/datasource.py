@@ -11,9 +11,10 @@ module.
 Scale shape:
 
 - ``partitions()`` lists the blob parquet FILES (a driver-side listing,
-  not a data read): every chunk's blob rows are written by one task, so
-  a chunk never straddles files and one file is one self-contained unit
-  of decode work.
+  not a data read): every writer of the store (``encode_table``, the
+  colcodec batch and stream writers, ``compact_tables``) writes all of
+  a chunk's blob rows from one task, so a chunk never straddles files
+  and one file is one self-contained unit of decode work.
 - Filter pushdown (``pushFilters``, Spark 4.1) does NOT prune on the
   driver: the accepted filters ride into every task, and ``read()``
   first scans only its file's metadata columns (chunk_id, column,
@@ -594,10 +595,12 @@ class _CommitLock:
 class ColcodecArrowWriter(DataSourceArrowWriter):
     """df.write.format("colcodec").save(store) — the DIRECT write path.
 
-    Each task encodes its own partition: rows are grouped by the repo
-    column with a size-triggered flush (a task holds at most one
-    target-sized buffer per repo — the same bounded-memory profile as
-    the pipeline's encode kernel), chunks stream into a staged parquet
+    Each task runs its partition through encode_table's kernel
+    (pipeline._encode_stream_fn) with the repo column as the group key
+    and one bucket per repo: a repo's rows are buffered until they
+    reach 2× target_chunk_bytes and are then flushed as target-sized
+    sub-chunks, so a task holds at most 2× target per in-flight repo
+    plus one incoming Arrow batch. Chunks stream into a staged parquet
     file, and the driver-side commit writes the schema sidecar FIRST and
     then atomically renames staged files into the store — a crash at any
     point leaves either a fully-valid store or a job-private
@@ -607,10 +610,10 @@ class ColcodecArrowWriter(DataSourceArrowWriter):
     paths group blob rows by chunk_id across files. NULL repo values
     group under the key "None" (the grouping key only drives chunk
     placement and naming — the encoded columns keep the true values).
-    Chunk placement follows the DataFrame's own partitioning; for
-    planned/salted/range layouts and manifest resume use
-    pipeline.encode_table (this path trades planning for plain
-    spark.write composability)."""
+    Chunk placement and row order follow the DataFrame's own
+    partitioning; for planned/salted/range layouts, sorted chunks and
+    manifest resume use pipeline.encode_table (this path trades
+    planning for plain spark.write composability)."""
 
     def __init__(self, path: str, cols: list[tuple[str, str]],
                  repo_col: str, compression: str | None,
@@ -641,55 +644,24 @@ class ColcodecArrowWriter(DataSourceArrowWriter):
         os.makedirs(staging, exist_ok=True)
         staged = os.path.join(staging, f"w-{uuid.uuid4().hex}.parquet")
 
-        writer = None
-        fsst_cache: dict = {}
-        bufs: dict[str, list] = {}
-        sizes: dict[str, int] = {}
-        seqs: dict[str, int] = {}
+        def keyed():
+            for batch in iterator:
+                repos = pc.fill_null(
+                    pc.cast(batch.column(self._repo_col), pa.string()),
+                    "None")
+                zeros = pa.array(np.zeros(batch.num_rows, np.int32))
+                yield batch.append_column("__repo", repos) \
+                    .append_column("__bucket", zeros)
 
-        def flush(repo: str):
-            nonlocal writer
-            tbl = pa.Table.from_batches(bufs.pop(repo))
-            sizes.pop(repo)
-            seq = seqs.get(repo, 0)
-            seqs[repo] = seq + 1
-            rec = pipeline._encode_one_chunk(
-                tbl, self._cols, repo, seq, self._compression,
-                f"@w{self._token}p{pid}", fsst_cache=fsst_cache)
+        encode = pipeline._encode_stream_fn(
+            self._cols, self._compression, [], f"@w{self._token}p{pid}",
+            self._target)
+        writer = None
+        for rec in encode(keyed()):
             if writer is None:
                 writer = pq.ParquetWriter(
                     staged, pipeline._BLOB_ARROW_SCHEMA)
-            writer.write_table(pa.Table.from_batches([rec]))
-
-        for batch in iterator:
-            n = batch.num_rows
-            if n == 0:
-                continue
-            # single-pass grouping (the encode kernel's idiom): one
-            # dictionary-encode + one stable argsort per batch, then
-            # contiguous slices per repo — not one filter scan per
-            # distinct value. NULLs group under "None".
-            repos = pc.fill_null(
-                pc.cast(batch.column(self._repo_col), pa.string()), "None")
-            dictized = pc.dictionary_encode(repos)
-            rcodes = np.asarray(dictized.indices).astype(np.int64)
-            rdict = dictized.dictionary
-            order = np.argsort(rcodes, kind="stable")
-            sorted_codes = rcodes[order]
-            change = np.ones(n, dtype=bool)
-            change[1:] = sorted_codes[1:] != sorted_codes[:-1]
-            starts = np.flatnonzero(change)
-            data = batch.take(pa.array(order))
-            for i, st in enumerate(starts):
-                e = starts[i + 1] if i + 1 < len(starts) else n
-                repo = rdict[int(sorted_codes[st])].as_py()
-                sl = data.slice(st, e - st)
-                bufs.setdefault(repo, []).append(sl)
-                sizes[repo] = sizes.get(repo, 0) + sl.nbytes
-                if sizes[repo] >= self._target:
-                    flush(repo)
-        for repo in list(bufs):
-            flush(repo)
+            writer.write_batch(rec)
         if writer is None:
             # Spark 4.1 rejects a None commit message despite the API
             # docstring — return an empty marker for empty partitions

@@ -35,7 +35,7 @@ SPARK 4.1 CAVEAT (upstream, applies to EVERY python data source with
 ``spark.sql.python.filterPushdown.enabled``): the JVM caches the
 planned partitions per relation (``PythonDataSourceV2.readInfo`` is
 get-or-create) and filter pushdown overwrites that cache, so a
-DataFrame OBJECT reused across queries serves the FIRST pushed
+DataFrame OBJECT reused across queries serves the LAST pushed
 query's pruned scan to any later query that pushes nothing (plain
 ``.count()``, an OR-only WHERE) — silently losing rows. Reproduced
 with a 20-line minimal source, so it is not this reader's state:

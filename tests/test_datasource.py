@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 from parquet_go_spark.plans import pipeline
 from parquet_go_spark.sources import datasource
 from parquet_go_spark.sources.datasource import _chunk_survives
+from parquet_go_spark.sources.repogen import repos_table
 
 
 @pytest.fixture(scope="module")
@@ -317,10 +318,21 @@ def test_write_path_roundtrip_append_overwrite(spark, tmp_path):
             for i in range(2000)]
     src = spark.createDataFrame(
         rows, "k bigint, grp string, txt string, price double, ts timestamp")
+    target = 2048
     src.write.format("colcodec").option("repo_col", "grp") \
-       .mode("append").save(d)
+       .option("target_chunk_bytes", target).mode("append").save(d)
     back = spark.read.format("colcodec").load(d)
     assert sorted(map(str, back.collect())) == sorted(map(str, src.collect()))
+    # the writer runs the encode kernel: a repo's rows flush in
+    # sub-chunks of at most 2x target
+    chunks = pipeline.manifest(spark, d).groupBy("repo", "chunk_id") \
+        .agg(F.sum("raw_bytes").alias("raw")).collect()
+    assert max(r["raw"] for r in chunks) <= 2 * target
+    per_repo = {r["repo"]: 0 for r in chunks}
+    for r in chunks:
+        per_repo[r["repo"]] += 1
+    assert sorted(per_repo) == ["g0", "g1", "g2"]
+    assert min(per_repo.values()) > 1, per_repo
     # append accumulates; overwrite replaces
     head = spark.createDataFrame(rows[:50], src.schema)
     head.write.format("colcodec").option("repo_col", "grp") \
@@ -440,6 +452,28 @@ def test_streaming_sink_exactly_once(spark, tmp_path):
     got = sorted(map(str, spark.read.format("colcodec").load(store).collect()))
     exp = sorted(map(str, df1.unionAll(df2).collect()))
     assert got == exp
+
+    # seeded repos rows in three files, one micro-batch each; a small
+    # target makes the encode kernel flush repos in sub-chunks
+    full = repos_table(spark, 3000, seed=11, n_repos=30).cache()
+    for i in range(3):
+        full.where(F.pmod(F.xxhash64("path", "commit"), F.lit(3)) == i) \
+            .coalesce(1).write.parquet(str(tmp_path / f"repos/slice{i}"))
+    rstore = str(tmp_path / "rstore")
+    q = (spark.readStream.schema(full.schema)
+         .option("maxFilesPerTrigger", 1)
+         .parquet(str(tmp_path / "repos/slice*"))
+         .writeStream.format("colcodec").option("repo_col", "repo")
+         .option("target_chunk_bytes", 4096)
+         .option("checkpointLocation", str(tmp_path / "rckpt"))
+         .trigger(availableNow=True).start(rstore))
+    q.awaitTermination(300)
+    assert len([f for f in os.listdir(rstore)
+                if f.startswith("part-qq0-b")]) >= 3
+    ids = pipeline.manifest(spark, rstore).select("chunk_id").distinct()
+    assert ids.where(F.col("chunk_id").rlike(r"#0s\d+@w")).count() > 0
+    res = pipeline.verify_roundtrip(spark, full, rstore)
+    assert res["ok"], res
 
 
 def test_streaming_source_tails_store(spark, tmp_path):

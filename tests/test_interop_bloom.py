@@ -227,3 +227,51 @@ def test_prune_files_distributed_matches_driver(tmp_path, spark, monkeypatch):
     dist = pqbloom.prune_files(paths, "k", probe, Kind.INT64, spark=spark)
     assert dist == driver
     assert paths[1] in dist and paths[4] in dist
+
+
+def _ctr_module(key: bytes, plaintext: bytes) -> bytes:
+    from cryptography.hazmat.primitives.ciphers import (
+        Cipher, algorithms, modes)
+
+    nonce = os.urandom(12)
+    enc = Cipher(algorithms.AES(key),
+                 modes.CTR(nonce + (1).to_bytes(4, "big"))).encryptor()
+    ct = enc.update(plaintext) + enc.finalize()
+    return (12 + len(ct)).to_bytes(4, "little") + nonce + ct
+
+
+def test_read_bloom_rejects_short_bitset(tmp_path):
+    """A bitset shorter than the header's numBytes (or a numBytes that
+    is not whole 32-byte blocks) raises instead of reading as a smaller
+    filter, which would answer false negatives."""
+    import io
+
+    from parquet_go_spark.interop import pqcrypt
+
+    hashes = _hash_strs([f"v{i}" for i in range(50)])
+    header, bits = pqbloom.bloom_parts(hashes, nbytes=64)
+    p = str(tmp_path / "bloom.bin")
+    with open(p, "wb") as f:
+        f.write(b"\0" * 7 + header + bits)
+    with open(p, "rb") as f:
+        words = pqbloom.read_bloom_at(f, 7)
+    assert words.shape == (2, 8) and pqbloom.might_contain(words, hashes).all()
+    with open(p, "wb") as f:
+        f.write(b"\0" * 7 + header + bits[:32])  # cut to one block
+    with open(p, "rb") as f, pytest.raises(ValueError, match="bitset"):
+        pqbloom.read_bloom_at(f, 7)
+    odd, _ = pqbloom.bloom_parts(hashes, nbytes=48)
+    with pytest.raises(ValueError, match="multiple of 32"):
+        pqbloom.read_bloom_at(io.BytesIO(odd + bits), 0)
+
+    # AES_GCM_CTR_V1: GCM header module, unauthenticated CTR bitset
+    key, aad = b"k" * 16, b"file-aad"
+    crypto = pqcrypt.ChunkCrypto(key=key, file_aad=aad, rg=0, col=0,
+                                 ctr=True)
+    hmod = pqcrypt.encrypt_module(
+        key, pqcrypt.module_aad(aad, pqcrypt.BLOOM_HEADER, 0, 0), header)
+    good = io.BytesIO(hmod + _ctr_module(key, bits))
+    assert pqbloom.read_bloom_at(good, 0, crypto).tobytes() == bits
+    short = io.BytesIO(hmod + _ctr_module(key, bits[:32]))
+    with pytest.raises(ValueError, match="bitset"):
+        pqbloom.read_bloom_at(short, 0, crypto)

